@@ -1574,17 +1574,15 @@ def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     annotated with its cluster size. Oracle = the dedup_clusters
     recursive-CTE reachability extended with the survivor anti-join.
 
-    Runs under 8 shuffle partitions: the pair set and every CC-round
-    frame are candidate-sized (hundreds of rows), so 32-partition
-    shuffles were pure empty-task overhead across the loop's jobs (r6:
-    4.6 -> ~3.6 s warm at sf0.1, together with the one-job-per-round
-    signature convergence check). The residual is the FLOOR for an
-    iterative distributed algorithm at toy scale: 4 contraction rounds
-    x one multi-stage job each + the pair generation — ~12 scheduler
-    round-trips over a 441-edge graph, i.e. the bench measures stage
-    scheduling latency, not data throughput; the job count is IDENTICAL
-    at 100 TB (O(log n) rounds), where each stage does real work. Floor
-    analysis in BENCH_SPLIT.json."""
+    Runs under 8 shuffle partitions: the pair set and the CC frames are
+    candidate-sized (hundreds of rows), so 32-partition shuffles were
+    pure empty-task overhead. AQE coalesces the edge set into one
+    partition, whose partition-local union-find resolves every component
+    in ONE pass: the edge distinct, the union-find and the star-forest
+    check are 3 jobs however long the chains, where the former
+    contraction loop paid one multi-stage job per round. A larger edge
+    set spans partitions and falls back to O(log n) large-star/small-star
+    rounds, each doing real work."""
     from bda_spadochrony_spark.operators.dedup import dedup_survivors
     from bda_spadochrony_spark.operators.similarity import pairwise_cosine_blocked
     configure(spark)
@@ -3102,7 +3100,8 @@ def q_traffic_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct-max modes (inner-joined), then the unweighted avg-of-avgs
     roll-up with mode-of-modes. Events are mapped onto the tomtom shape
     with deterministic null injection so every null-semantics branch is
-    exercised."""
+    exercised. One scan: each level is one Expand, one aggregate and one
+    roll-up (7 Spark jobs where the reference's 9-scan shape took 28)."""
     from bda_spadochrony_spark.plans.pipelines import traffic_hourly
     return traffic_hourly(_tomtom_shaped(spark, sf_dir))
 
@@ -3126,12 +3125,12 @@ def _tomtom_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_traffic_hourly_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB rewrite of ``traffic_hourly``: identical rows (checked
-    against the SAME SQL oracle), one fused fine-level aggregate instead
-    of five scans + four joins — the demonstration that parity semantics
-    and a scale-shaped plan are not in tension."""
-    from bda_spadochrony_spark.plans.pipelines import traffic_hourly_fused
-    return traffic_hourly_fused(_tomtom_shaped(spark, sf_dir))
+    """The registry name of the scale rewrite of ``traffic_hourly``, kept
+    for the bench line that pins it. The rewrite IS ``traffic_hourly``'s
+    plan now (one scan, checked against the SAME SQL oracle), so both
+    names build the one plan."""
+    from bda_spadochrony_spark.plans.pipelines import traffic_hourly
+    return traffic_hourly(_tomtom_shaped(spark, sf_dir))
 
 
 def q_stock_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3901,8 +3900,9 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator derives the identical count from the parquet footer
     (``_oracle_embedding_count``, the planes_for pattern).
     Runs under 8 shuffle partitions like q_dedup_survivors: the pair
-    set and every CC-round frame are candidate-sized, so 32-partition
-    shuffles are empty-task churn across the contraction loop's jobs."""
+    set and the CC frames are candidate-sized, so 32-partition shuffles
+    are empty-task churn; the coalesced edge set resolves in one
+    union-find pass."""
     from bda_spadochrony_spark.operators.similarity import semantic_dedup
     configure(spark)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -4926,8 +4926,8 @@ def _zorder_oracle() -> str:
 def oracle_sql() -> dict[str, str]:
     d = _oracle_sql_literal()
     d["zorder_layout"] = _zorder_oracle()
-    # the fused rewrite must produce byte-identical rows to the parity
-    # pipeline — one oracle serves both
+    # both registry names build the one traffic_hourly plan — one oracle
+    # serves both
     d["traffic_hourly_fused"] = d["traffic_hourly"]
     # the streamed-in, cell-partitioned index is semantics-preserving:
     # the partition-pruned search equals the one-shot subset-center IVF

@@ -683,147 +683,149 @@ def sketch_incremental_dedup(new_sketch: DataFrame,
                     .otherwise(0).alias("admitted")))
 
 
-def _min_label_propagation(pairs: DataFrame, id_a: str, id_b: str,
-                           max_iter: int) -> tuple[DataFrame, int]:
-    """Minimum-label propagation: every round each node adopts
-    min(own label, neighbors' labels). One shuffle-join per round;
-    converges in O(component diameter) rounds. Returns (labels, rounds)."""
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    sym = edges.union(edges.select(F.col("dst").alias("src"),
-                                   F.col("src").alias("dst")))
-    labels = (edges.select(F.col("src").alias("id"))
-              .union(edges.select("dst")).distinct()
-              .withColumn("label", F.col("id")))
-    for rounds in range(1, max_iter + 1):
-        nbr = (sym.join(labels, sym.dst == labels.id)
-               .groupBy("src").agg(F.min("label").alias("nbr_min")))
-        merged = (labels.join(nbr, labels.id == nbr.src, "left")
-                  .select(labels.id.alias("id"),
-                          F.col("label").alias("old_label"),
-                          F.least(F.col("label"),
-                                  F.coalesce("nbr_min", F.col("label")))
-                          .alias("label")))
-        merged = merged.localCheckpoint(eager=True)  # cut lineage per round
-        labels = merged
-        if merged.where(F.col("label") != F.col("old_label")).isEmpty():
-            return labels.select("id", F.col("label").alias("canonical_id")), rounds
-    return None, max_iter  # non-converged sentinel — caller raises
+def _local_stars(batches):
+    """Partition-local union-find (``mapInArrow`` body): rewrite one
+    partition's canonical ``(lo, hi)`` edges into stars on their local
+    component minimum, one ``(root, node)`` row per node seen — roots
+    included as ``(root, root)``. Ids are opaque dictionary codes, so
+    the id column keeps its own type. The partition arrives sorted on
+    ``lo`` and the dictionary numbers values in order of first
+    appearance, so among ``lo`` values code order IS Spark's order; a
+    value seen only as ``hi`` has a larger code and is never a
+    component minimum (its edge's ``lo`` is smaller), so the smallest
+    code of a component is its Spark minimum. Peak memory is the
+    partition's node map — AQE's advisory partition size bounds it."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    batches = list(batches)
+    if not batches:
+        return
+    t = pa.Table.from_batches(batches)
+    n_e = t.num_rows
+    enc = pc.dictionary_encode(
+        pa.concat_arrays(t.column("lo").chunks + t.column("hi").chunks))
+    codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    a, b = codes[:n_e], codes[n_e:]
+    parent = np.arange(len(enc.dictionary))
+    while True:
+        # hook each edge's two roots onto the smaller, then jump pointers
+        # until every node points at a root (parent never increases)
+        ra, rb = parent[a], parent[b]
+        m = np.minimum(ra, rb)
+        np.minimum.at(parent, ra, m)
+        np.minimum.at(parent, rb, m)
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+        if np.array_equal(parent[a], parent[b]):
+            break
+    yield pa.RecordBatch.from_arrays(
+        [enc.dictionary.take(pa.array(parent)), enc.dictionary],
+        names=["lo", "hi"])
 
 
-def _star_contraction(pairs: DataFrame, id_a: str, id_b: str,
-                      max_iter: int) -> tuple[DataFrame, int]:
-    """Large-star/small-star contraction (Kiveris et al. '14, "Connected
-    Components in MapReduce and Beyond"): alternate
+def _star_round(edges: DataFrame) -> DataFrame:
+    """One large-star/small-star round (Kiveris et al. '14, "Connected
+    Components in MapReduce and Beyond") over canonical ``lo < hi``
+    edges:
 
     - LARGE-STAR: every node u links each strictly-larger neighbor to
       m = min(N(u) ∪ {u}) — emit (v, m) for v ∈ N(u), v > u;
     - SMALL-STAR: orient edges toward the larger endpoint (u > v), then
       u re-links its smaller neighborhood (and itself) to m = min(N(u)):
-      emit (x, m) for x ∈ N(u) ∪ {u}, x ≠ m;
+      emit (x, m) for x ∈ N(u) ∪ {u}, x ≠ m.
 
-    until the edge set is stable. Converges in O(log n) rounds — the
-    scale answer for chain-shaped near-dup graphs where propagation's
-    O(diameter) stalls. Each half-round is one groupBy + one join on node
-    id, the same shuffle primitive as propagation. At convergence every
-    non-root node holds exactly one edge to its component minimum.
-    Returns (labels-for-edge-nodes, rounds); roots are re-attached by the
-    caller.
-    """
-    # canonical undirected edge set, self-loops dropped
+    Each half-round is one groupBy + one join on node id, so the fan-out
+    of a hub never materializes in one row."""
+    sym = edges.select(F.col("lo").alias("u"), F.col("hi").alias("v")) \
+        .union(edges.select(F.col("hi").alias("u"), F.col("lo").alias("v")))
+    mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+    large = (sym.join(mins, "u")
+             .where(F.col("v") > F.col("u"))
+             .select(F.least("v", "m").alias("lo"),
+                     F.greatest("v", "m").alias("hi"))
+             .where(F.col("lo") != F.col("hi")))
+    mins_s = large.groupBy("hi").agg(F.min("lo").alias("m"))
+    relink = (large.join(mins_s, "hi")
+              .where(F.col("lo") != F.col("m"))
+              .select(F.col("m").alias("lo"), F.col("lo").alias("hi")))
+    return relink.union(mins_s.select(F.col("m").alias("lo"), "hi"))
+
+
+def _connected_components(pairs: DataFrame, id_a: str, id_b: str,
+                          max_iter: int) -> tuple[DataFrame | None, int]:
+    """Returns ``(labels, passes)``; ``labels`` is None when ``max_iter``
+    passes did not converge.
+
+    A pass runs the partition-local union-find, then tests in ONE
+    aggregate whether the rewritten edge set is a star forest — no node
+    is both a parent and a child, and no child has two parents. Edges
+    are oriented ``lo → hi``, so a star's center is its component's
+    minimum and the test is exactly large-star/small-star's terminal
+    state. The same aggregate yields the labels. AQE coalesces a small
+    edge set into one partition, whose union-find is exact, so the
+    first pass resolves it; otherwise one large-star/small-star round
+    contracts the graph and the next pass tries again."""
     edges = (pairs.select(F.least(id_a, id_b).alias("lo"),
                           F.greatest(id_a, id_b).alias("hi"))
-             .where(F.col("lo") != F.col("hi")).distinct()
-             .localCheckpoint(eager=True))
-
-    def signature(df: DataFrame) -> tuple[int, int]:
-        # one tiny job: (row count, order-invariant hash-xor — stays in
-        # the long domain under ANSI, unlike a hash SUM). Equal
-        # signatures are a NECESSARY convergence condition checked every
-        # round; set equality is CONFIRMED with one exceptAll only when
-        # the signature matches — r5 spent 2 extra exceptAll jobs per
-        # run on count-equal-but-still-moving rounds
-        r = df.agg(F.count(F.lit(1)).alias("n"),
-                   F.bit_xor(F.xxhash64("lo", "hi")).alias("h")).first()
-        return r["n"], r["h"]
-
-    sig_edges = signature(edges)
-    for rounds in range(1, max_iter + 1):
-        # -- large-star: u's neighborhood from BOTH orientations
-        sym = edges.select(F.col("lo").alias("u"), F.col("hi").alias("v")) \
-            .union(edges.select(F.col("hi").alias("u"), F.col("lo").alias("v")))
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m"))
-        # NOT distinct'ed: the duplicate relinks a multi-edge produces are
-        # removed by the round-final distinct anyway, and the extra
-        # exchange per round cost more than the duplicate rows it saved
-        # (fanout through the small-star join is bounded by Σ deg(u)² of
-        # the CONTRACTED graph, which shrinks geometrically per round)
-        large = (sym.join(mins, "u")
-                 .where(F.col("v") > F.col("u"))
-                 .select(F.least("v", "m").alias("lo"),
-                         F.greatest("v", "m").alias("hi"))
-                 .where(F.col("lo") != F.col("hi")))
-        # -- small-star: orient toward the larger endpoint; u = hi, N(u) = lo.
-        # Emit (m, x) for x ∈ N(u) ∪ {u}, x ≠ m — as a join, never a
-        # collect_set (a hub's neighborhood must not materialize in one row)
-        mins_s = large.groupBy("hi").agg(F.min("lo").alias("m"))
-        relink = (large.join(mins_s, "hi")
-                  .where(F.col("lo") != F.col("m"))
-                  .select(F.col("m").alias("lo"), F.col("lo").alias("hi")))
-        self_link = mins_s.select(F.col("m").alias("lo"), "hi")
-        # LAZY checkpoint: the signature aggregate is the round's only
-        # action, and its first pass materializes the checkpoint as a
-        # side effect — one job per round where eager + count was two
-        small = relink.union(self_link).distinct().localCheckpoint(eager=False)
-        sig_small = signature(small)
-        # both sides are DISTINCT sets: equal signature + one-direction
-        # except empty ⟺ set equality
-        if sig_small == sig_edges and small.exceptAll(edges).isEmpty():
-            return small.select(F.col("hi").alias("id"),
-                                F.col("lo").alias("canonical_id")), rounds
-        edges, sig_edges = small, sig_small
+             .where(F.col("lo").isNotNull()).distinct())
+    # per node: its parents (smaller neighbors) and its largest neighbor
+    both = F.explode(F.array(
+        F.struct(F.col("hi").alias("node"), F.col("lo").alias("other")),
+        F.struct(F.col("lo").alias("node"), F.col("hi").alias("other"))))
+    parent = F.when(F.col("other") < F.col("node"), F.col("other"))
+    for passes in range(1, max_iter + 1):
+        # checkpointed: the check and a fallback round both read it
+        stars = (edges.sortWithinPartitions("lo")
+                 .mapInArrow(_local_stars, edges.schema)
+                 .localCheckpoint(eager=False))
+        nodes = (stars.select(both.alias("e")).select("e.*")
+                 .groupBy("node")
+                 .agg(F.min(parent).alias("p_min"), F.max(parent).alias("p_max"),
+                      F.max("other").alias("top"))
+                 .select(F.col("node").alias("id"),
+                         F.coalesce("p_min", "node").alias("canonical_id"),
+                         (F.col("p_min").isNotNull() &
+                          ((F.col("p_min") != F.col("p_max")) |
+                           (F.col("top") > F.col("node")))).alias("__bad"))
+                 .localCheckpoint(eager=False))
+        if nodes.where("__bad").isEmpty():
+            return nodes.drop("__bad"), passes
+        # roots carried as (x, x) rows keep edge-less nodes labelled
+        edges = (_star_round(stars.where(F.col("lo") != F.col("hi")))
+                 .union(stars.where(F.col("lo") == F.col("hi")))
+                 .distinct())
     return None, max_iter
 
 
 def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-                   max_iter: int = 20,
-                   algorithm: str = "star") -> DataFrame:
+                   max_iter: int = 20) -> DataFrame:
     """Connected components over near-duplicate PAIRS → one canonical id
     (the component minimum) per member — the step that turns pairwise
     near-dup output into keep/drop decisions for a corpus.
 
-    ``algorithm="star"`` (default) runs large-star/small-star contraction,
-    O(log n) rounds — the 100 TB path. ``algorithm="propagation"`` runs
-    plain min-label propagation, O(diameter) rounds — kept as the simple
-    twin for small/star-shaped graphs. Both produce identical output.
+    Each pass is a partition-local union-find plus one star-forest
+    aggregate (``_connected_components``). An edge set that AQE
+    coalesces into one partition resolves in the first pass — a few
+    jobs however long its chains; a larger one falls back to
+    large-star/small-star rounds, O(log n) of them. Ids keep their own
+    type and Spark's ordering; a NULL id matches nothing and gets no
+    row.
 
-    Raises ValueError if the round budget is exhausted before convergence
+    Raises ValueError if the pass budget is exhausted before convergence
     (a silent partial result would hand back multiple canonical ids for
     one component — data corruption for a dedup pipeline).
 
     Returns (id, canonical_id) for every node that appears in ``pairs``.
     """
-    if algorithm == "propagation":
-        labels, _ = _min_label_propagation(pairs, id_a, id_b, max_iter)
-    elif algorithm == "star":
-        star_labels, _ = _star_contraction(pairs, id_a, id_b, max_iter)
-        if star_labels is None:
-            labels = None
-        else:
-            # star labels cover non-root edge nodes; re-attach roots and
-            # any self-pair-only nodes with canonical = self
-            nodes = (pairs.select(F.col(id_a).alias("id"))
-                     .union(pairs.select(F.col(id_b).alias("id"))).distinct())
-            labels = (nodes.join(star_labels, "id", "left")
-                      .select("id", F.coalesce("canonical_id", "id")
-                              .alias("canonical_id")))
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    labels, _ = _connected_components(pairs, id_a, id_b, max_iter)
     if labels is None:
         raise ValueError(
             f"dedup_clusters did not converge within max_iter={max_iter} "
-            f"rounds ({algorithm}) — raise max_iter, or use "
-            f"algorithm='star' for chain-shaped components")
+            f"passes — raise max_iter")
     return labels
 
 

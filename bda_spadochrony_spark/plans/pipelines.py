@@ -64,83 +64,83 @@ def stock_hourly(stock: DataFrame) -> DataFrame:
         avg_cols=["volume", "vwap", "open", "close", "high", "low", "transactions"])
 
 
+def _two_mode_rollup(df: DataFrame, keys: list[str], modes: tuple[str, str],
+                     measures: list[str]) -> DataFrame:
+    """Per ``keys``: the row count, each ``measures`` column's double sum
+    and non-null count, and the mode of both ``modes`` columns — from
+    ONE Expand (grouping sets ``keys + [mode]``) and two aggregates. The
+    first mode's rows carry the additive partials; both sets carry the
+    per-value counts, so each mode is a conditional
+    ``max(struct(count, value))``: ties go to the larger value and NULL
+    is a value of its own, as in ``mode_by_struct_max``. Integral
+    measures are cast to double before summing, as Spark's ``Average``
+    does (decimals too, so their averages come out double)."""
+    m0, m1 = modes
+    by_value = (df.groupingSets([[*keys, m0], [*keys, m1]], *keys, m0, m1)
+                .agg(F.grouping(m1).alias("__is_m0"),   # m1 grouped out
+                     F.count(F.lit(1)).alias("__n"),
+                     *[F.sum(F.col(c).cast("double")).alias(f"__s_{c}")
+                       for c in measures],
+                     *[F.count(c).alias(f"__c_{c}") for c in measures]))
+    is_m0 = F.col("__is_m0") == 1
+
+    def of_m0(c: str) -> Column:
+        return F.when(is_m0, F.col(c))
+
+    def mode(cond: Column, c: str) -> Column:
+        return F.max(F.when(cond, F.struct("__n", c))).getField(c).alias(c)
+    return by_value.groupBy(*keys).agg(
+        F.sum(of_m0("__n")).alias("__rows"),
+        *[F.sum(of_m0(f"__s_{c}")).alias(f"__s_{c}") for c in measures],
+        *[F.sum(of_m0(f"__c_{c}")).alias(f"__c_{c}") for c in measures],
+        mode(is_m0, m0), mode(~is_m0, m1))
+
+
 def traffic_hourly(tomtom: DataFrame, tz: str | None = "America/New_York") -> DataFrame:
     """``batch_tomtom.py`` parity — the hardest batch shape (SURVEY §7.2
-    step 5), reproduced stage for stage:
+    step 5), with the reference's semantics:
 
     - NY wall-clock date/hour (``batch_tomtom.py:86-88``);
     - per-(date,hour,iconCategory,id) null-domain averages of delay/length
-      (filter-then-avg, :94-100) and ``count(probabilityOfOccurrence)``
-      (null-skipping, :103) — INNER-joined (:104-106), so a fine group whose
-      delays or lengths are ALL null drops out, exactly as the reference's;
+      (filter-then-avg, :94-100), INNER-joined (:104-106): a fine group
+      with a NULL key, or whose delays or lengths are ALL null, drops out;
     - fine-level modes of probabilityOfOccurrence and magnitudeOfDelay
       (struct-max, larger-value tie-break, :110-112);
     - the unweighted avg-of-avgs roll-up to (date,hour,iconCategory) with
       rounding applied at the COARSE level only (:115-118), plus the
       mode-of-modes columns (:120-122).
+
+    The reference's five fine-level scans and four joins are one scan
+    here: each level is one Expand feeding one aggregate and one roll-up
+    (``_two_mode_rollup``), the survivor filter a HAVING on the non-null
+    counts. Its ``count(probabilityOfOccurrence)`` never reaches the
+    output and is not computed.
     """
-    keyed = with_date_hour(tomtom, "observationTime", tz=tz)
     fine_keys = ["date", "hour", "iconCategory", "id"]
-    delay = (keyed.filter(F.col("delay").isNotNull())
-             .groupBy(*fine_keys).agg(F.avg("delay").alias("avg_delay")))
-    length = (keyed.filter(F.col("length").isNotNull())
-              .groupBy(*fine_keys).agg(F.avg("length").alias("avg_length")))
-    fine = (keyed.groupBy(*fine_keys)
-            .agg(F.count("probabilityOfOccurrence").alias("n_prob"))
-            .join(delay, fine_keys)
-            .join(length, fine_keys)
-            .join(mode_by_struct_max(keyed, fine_keys, "probabilityOfOccurrence"),
-                  fine_keys)
-            .join(mode_by_struct_max(keyed, fine_keys, "magnitudeOfDelay"),
-                  fine_keys))
+    keyed = (with_date_hour(tomtom, "observationTime", tz=tz)
+             .dropna(subset=fine_keys))
+    fine = (_two_mode_rollup(keyed, fine_keys,
+                             ("probabilityOfOccurrence", "magnitudeOfDelay"),
+                             ["delay", "length"])
+            .where((F.col("__c_delay") > 0) & (F.col("__c_length") > 0))
+            .select(*fine_keys,
+                    (F.col("__s_delay") / F.col("__c_delay")).alias("avg_delay"),
+                    (F.col("__s_length") / F.col("__c_length")).alias("avg_length"),
+                    F.col("probabilityOfOccurrence").alias("mode_prob"),
+                    F.col("magnitudeOfDelay").alias("mode_mag")))
     coarse_keys = ["date", "hour", "iconCategory"]
-    coarse = (fine.groupBy(*coarse_keys)
-              .agg(F.count("id").alias("n_incidents"),
-                   stable_round(F.avg("avg_delay"), 2).alias("avg_avg_delay"),
-                   stable_round(F.avg("avg_length"), 2).alias("avg_avg_length"))
-              .join(mode_by_struct_max(fine, coarse_keys,
-                                       "mode_probabilityOfOccurrence",
-                                       out_col="coarse_mode_prob"), coarse_keys)
-              .join(mode_by_struct_max(fine, coarse_keys, "mode_magnitudeOfDelay",
-                                       out_col="coarse_mode_mag"), coarse_keys))
-    return sort_by(coarse, ["date", "hour", "iconCategory"])
-
-
-def traffic_hourly_fused(tomtom: DataFrame,
-                         tz: str | None = "America/New_York") -> DataFrame:
-    """The 100 TB rewrite of ``traffic_hourly`` — IDENTICAL output (same
-    oracle), a fraction of the plan: the reference's five fine-level scans
-    + four joins collapse into one scan computing every frame-expressible
-    measure in a single hash aggregate (avg ≡ sum/count over non-nulls,
-    survivor filter ≡ HAVING), plus two mode scans that can't share a
-    single groupBy (each mode needs its own per-value marginal counts).
-    9 scans / 39 exchanges → 3 scans / ~13 exchanges at sf0.1."""
-    keyed = with_date_hour(tomtom, "observationTime", tz=tz)
-    fine_keys = ["date", "hour", "iconCategory", "id"]
-    base = (keyed.groupBy(*fine_keys)
-            .agg(F.count("probabilityOfOccurrence").alias("n_prob"),
-                 F.avg("delay").alias("avg_delay"),
-                 F.avg("length").alias("avg_length"),
-                 F.count("delay").alias("__nd"),
-                 F.count("length").alias("__nl"))
-            .where((F.col("__nd") > 0) & (F.col("__nl") > 0))
-            .drop("__nd", "__nl"))
-    fine = (base
-            .join(mode_by_struct_max(keyed, fine_keys, "probabilityOfOccurrence"),
-                  fine_keys)
-            .join(mode_by_struct_max(keyed, fine_keys, "magnitudeOfDelay"),
-                  fine_keys))
-    coarse_keys = ["date", "hour", "iconCategory"]
-    coarse = (fine.groupBy(*coarse_keys)
-              .agg(F.count("id").alias("n_incidents"),
-                   stable_round(F.avg("avg_delay"), 2).alias("avg_avg_delay"),
-                   stable_round(F.avg("avg_length"), 2).alias("avg_avg_length"))
-              .join(mode_by_struct_max(fine, coarse_keys,
-                                       "mode_probabilityOfOccurrence",
-                                       out_col="coarse_mode_prob"), coarse_keys)
-              .join(mode_by_struct_max(fine, coarse_keys, "mode_magnitudeOfDelay",
-                                       out_col="coarse_mode_mag"), coarse_keys))
-    return sort_by(coarse, ["date", "hour", "iconCategory"])
+    coarse = (_two_mode_rollup(fine, coarse_keys, ("mode_prob", "mode_mag"),
+                               ["avg_delay", "avg_length"])
+              .select(*coarse_keys,
+                      # never NULL: keeps count()'s non-nullable type
+                      F.coalesce("__rows", F.lit(0)).alias("n_incidents"),
+                      stable_round(F.col("__s_avg_delay") / F.col("__c_avg_delay"),
+                                   2).alias("avg_avg_delay"),
+                      stable_round(F.col("__s_avg_length") / F.col("__c_avg_length"),
+                                   2).alias("avg_avg_length"),
+                      F.col("mode_prob").alias("coarse_mode_prob"),
+                      F.col("mode_mag").alias("coarse_mode_mag")))
+    return sort_by(coarse, coarse_keys)
 
 
 def corpus_pipeline(docs: DataFrame, id_col: str = "doc_id",

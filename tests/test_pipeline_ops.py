@@ -529,32 +529,92 @@ def test_dedup_clusters_chain_and_islands(spark):
                    20: 20, 21: 20, 22: 20}
 
 
-def test_dedup_clusters_raises_on_nonconvergence(spark):
-    """A component whose diameter exceeds the round budget must fail loudly
-    — partial propagation would yield multiple canonical ids for one
-    component, which is silent data corruption for a dedup pipeline."""
-    import pytest
+def test_dedup_clusters_raises_on_nonconvergence(spark, conf_override):
+    """A component the pass budget cannot resolve must fail loudly —
+    a partial result would yield multiple canonical ids for one
+    component, which is silent data corruption for a dedup pipeline.
+    One pass resolves any graph AQE coalesces into one partition, so
+    the chain is spread over 8 shuffle partitions with coalescing off:
+    each partition's union-find sees a fragment, the star-forest check
+    fails, and ``max_iter=1`` leaves no pass for the fallback round."""
+    conf_override({"spark.sql.adaptive.coalescePartitions.enabled": "false",
+                   "spark.sql.shuffle.partitions": "8"})
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)], ["id_a", "id_b"])
     with pytest.raises(ValueError, match="did not converge"):
         D.dedup_clusters(pairs, max_iter=1)
+    got = {r["id"]: r["canonical_id"]
+           for r in D.dedup_clusters(pairs, max_iter=20).collect()}
+    assert got == {i: 1 for i in range(1, 7)}
 
 
 def test_star_contraction_matches_propagation_fewer_rounds(spark):
-    """Large-star/small-star converges in O(log n) rounds on a chain —
-    the worst case for O(diameter) propagation — with identical output."""
+    """A chain is the worst case for O(diameter) propagation (the
+    reference): the coalesced edge set resolves in ONE union-find pass,
+    with identical output."""
+    from tests.references import min_label_propagation
     n = 17
     pairs = spark.createDataFrame([(i, i + 1) for i in range(1, n)],
                                   ["id_a", "id_b"])
-    _, star_rounds = D._star_contraction(pairs, "id_a", "id_b", 40)
-    _, prop_rounds = D._min_label_propagation(pairs, "id_a", "id_b", 40)
-    assert star_rounds < prop_rounds, (star_rounds, prop_rounds)
-
-    star = {r["id"]: r["canonical_id"]
-            for r in D.dedup_clusters(pairs, algorithm="star").collect()}
-    prop = {r["id"]: r["canonical_id"]
-            for r in D.dedup_clusters(pairs, algorithm="propagation").collect()}
+    labels, passes = D._connected_components(pairs, "id_a", "id_b", 40)
+    ref, prop_rounds = min_label_propagation(pairs, "id_a", "id_b", 40)
+    assert passes == 1 < prop_rounds, (passes, prop_rounds)
+    star = {r["id"]: r["canonical_id"] for r in labels.collect()}
+    prop = {r["id"]: r["canonical_id"] for r in ref.collect()}
     assert star == prop == {i: 1 for i in range(1, n + 1)}
+
+
+def test_dedup_clusters_small_graph_job_budget(spark, jobs_issued):
+    """A small edge set costs a fixed handful of Spark jobs — the edge
+    distinct, the union-find with its star-forest check — not a job
+    per contraction round."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 12)] + [(30, 31), (40, 41), (41, 42)],
+        ["id_a", "id_b"])
+    _, jobs = jobs_issued(lambda: D.dedup_clusters(pairs))
+    assert jobs <= 6, jobs
+    _, passes = D._connected_components(pairs, "id_a", "id_b", 20)
+    assert passes == 1
+
+
+def _cc_graph():
+    """Chains, a star entered from both edge orientations, a triangle,
+    islands and a self-pair — as integer node numbers."""
+    chain = [(i, i + 1) for i in range(1, 16)]
+    star = [(c, 20) if c % 2 else (20, c) for c in range(21, 30)]
+    triangle = [(31, 32), (32, 33), (33, 31)]
+    islands = [(40, 41), (50, 50), (61, 60)]
+    return chain + star + triangle + islands
+
+
+@pytest.mark.parametrize("kind", ["string", "date"])
+def test_dedup_clusters_fallback_rounds_match_reference(spark, conf_override,
+                                                        kind):
+    """The large-star/small-star fallback, forced with multi-partition
+    input (8 shuffle partitions, AQE coalescing off), equals the
+    propagation reference. Unpadded string ids order as Spark orders
+    them ("n10" < "n9"), not numerically; date ids keep their type."""
+    import datetime
+    from tests.references import min_label_propagation
+    conf_override({"spark.sql.adaptive.coalescePartitions.enabled": "false",
+                   "spark.sql.shuffle.partitions": "8"})
+    if kind == "string":
+        to_id, ddl = (lambda i: f"n{i}"), "id_a string, id_b string"
+    else:
+        day0 = datetime.date(2024, 1, 1)
+        to_id = lambda i: day0 + datetime.timedelta(days=(i * 37) % 101)  # noqa: E731
+        ddl = "id_a date, id_b date"
+    pairs = spark.createDataFrame(
+        [(to_id(a), to_id(b)) for a, b in _cc_graph()], ddl)
+    labels, passes = D._connected_components(pairs, "id_a", "id_b", 20)
+    assert passes > 1, "the input must force the fallback round"
+    assert labels.schema == spark.createDataFrame(
+        [], ddl.replace("id_a", "id").replace("id_b", "canonical_id")).schema
+    ref, _ = min_label_propagation(pairs, "id_a", "id_b", 40)
+    got = {r["id"]: r["canonical_id"] for r in labels.collect()}
+    want = {r["id"]: r["canonical_id"] for r in ref.collect()}
+    assert got == want
+    assert len(set(got.values())) == 6   # chain, star, triangle, 3 islands
 
 
 # ------------------------------------------------- deterministic sampling --

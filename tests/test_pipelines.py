@@ -76,6 +76,69 @@ def test_traffic_hourly_avg_of_avgs(spark):
         assert got[key]["coarse_mode_mag"] is not None
 
 
+def _traffic_edge_rows():
+    """tomtom fixture rows with INTEGRAL delay, plus the edge groups:
+    NULL keys, prob/mag mode ties, a NULL-majority prob, and fine
+    groups whose delays (or lengths) are all NULL."""
+    from datetime import datetime
+    rows, cols = tomtom_rows()
+    rows = [(ic, iid, p, None if d is None else int(d), m, ln, ts)
+            for ic, iid, p, d, m, ln, ts in rows]
+    t = datetime(2024, 3, 1, 8, 30)
+    rows += [
+        ("1", None, "certain", 10, "1", 100.0, t),          # NULL id
+        (None, "inc1", "certain", 10, "1", 100.0, t),       # NULL category
+        ("1", "inc1", "certain", 10, "1", 100.0, None),     # NULL time
+        ("edge", "tie", "certain", 5, "1", 10.0, t),        # 2:2 ties on
+        ("edge", "tie", "certain", 6, "1", 20.0, t),        # prob and mag
+        ("edge", "tie", "risk_of", 7, "3", 30.0, t),
+        ("edge", "tie", "risk_of", 8, "3", None, t),
+        ("edge", "nodelay", "certain", None, "4", 50.0, t),  # all delays NULL
+        ("edge", "nodelay", "certain", None, "4", 60.0, t),
+        ("edge", "nolength", "certain", 9, "4", None, t),    # all lengths NULL
+        ("nullmode", "n", None, 1, "0", 5.0, t),            # NULL prob wins
+        ("nullmode", "n", None, 2, "0", 5.0, t),
+        ("nullmode", "n", "probable", 3, "2", 5.0, t),
+    ]
+    return rows, cols
+
+
+def test_traffic_hourly_single_scan_matches_reference(spark, conf_override):
+    """The production plan reads its source ONCE (one parquet FileScan —
+    the reference's shape scans it 9 times) and equals the tests/
+    reference row for row under ANSI, on NULL keys, mode ties, all-NULL
+    delay/length groups and an integral delay column."""
+    import shutil
+    import tempfile
+    from bda_spadochrony_spark.sources.readers import scan
+    from tests.references import traffic_hourly_reference
+    conf_override({"spark.sql.ansi.enabled": "true"})
+    rows, cols = _traffic_edge_rows()
+    base = tempfile.mkdtemp(prefix="bda_traffic_")
+    try:
+        (spark.createDataFrame(rows, "iconCategory string, id string, "
+                               "probabilityOfOccurrence string, delay int, "
+                               "magnitudeOfDelay string, length double, "
+                               "observationTime timestamp")
+         .write.mode("overwrite").parquet(base + "/t"))
+        src = scan(spark, base + "/t")
+        out = traffic_hourly(src)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == 1, plan
+        want = traffic_hourly_reference(src)
+        assert out.schema == want.schema
+        got = [tuple(r) for r in out.collect()]
+        assert got == [tuple(r) for r in want.collect()]
+        assert None not in {r[2] for r in got}
+        edge = {r[2]: r for r in got if r[2] in ("edge", "nullmode")}
+        # only "tie" survives in "edge": its 2:2 ties go to the larger
+        # value; "nullmode"'s NULL probability outnumbers "probable"
+        assert edge["edge"][3:] == (1, 6.5, 20.0, "risk_of", "3")
+        assert edge["nullmode"][3:] == (1, 2.0, 5.0, None, "0")
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_fused_stream_join_with_inference(spark):
     """stream_combined parity: JSON payload streams → typed parse → feature
     + model branch → watermarked full-outer interval join → foreachBatch

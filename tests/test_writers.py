@@ -125,6 +125,61 @@ def test_scan_reads_json_and_csv(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_scan_repeat_of_unchanged_path_issues_no_job(spark, jobs_issued):
+    """The first schema-less scan() runs Spark's inference job; a repeat
+    of the unchanged path passes the memoized schema back and runs none."""
+    base = tempfile.mkdtemp(prefix="bda_memo_")
+    try:
+        spark.range(5).write.parquet(base + "/p")
+        first, n_first = jobs_issued(lambda: scan(spark, base + "/p"))
+        again, n_again = jobs_issued(lambda: scan(spark, base + "/p"))
+        assert n_first >= 1 and n_again == 0, (n_first, n_again)
+        assert again.schema == first.schema
+        assert sorted(r[0] for r in again.collect()) == list(range(5))
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_scan_rewritten_path_is_reinferred(spark, jobs_issued):
+    """Rewriting the files under a path changes their (mtime, size)
+    identity: the next scan() infers afresh and sees the new schema."""
+    base = tempfile.mkdtemp(prefix="bda_memo_")
+    try:
+        spark.range(3).write.parquet(base + "/p")
+        assert scan(spark, base + "/p").columns == ["id"]
+        (spark.range(3).withColumn("v", F.col("id") * 2)
+         .write.mode("overwrite").parquet(base + "/p"))
+        back, jobs = jobs_issued(lambda: scan(spark, base + "/p"))
+        assert jobs >= 1
+        assert back.columns == ["id", "v"]
+        assert sorted(map(tuple, back.collect())) == [(0, 0), (1, 2), (2, 4)]
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_scan_memo_keys_on_inference_conf(spark, conf_override):
+    """One file read under inferTimestampNTZ true and false yields both
+    schemas, in either order: the memo keys on the conf."""
+    import datetime
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampNTZType, TimestampType
+    base = tempfile.mkdtemp(prefix="bda_memo_")
+    try:
+        # a wall-clock (isAdjustedToUTC=false) microsecond timestamp
+        pq.write_table(pa.table({"t": pa.array(
+            [datetime.datetime(2024, 1, 1, 12)], pa.timestamp("us"))}),
+            base + "/ntz.parquet")
+        key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+        seen = []
+        for flag in ("true", "false", "true", "false"):
+            conf_override({key: flag})
+            seen.append(type(scan(spark, base).schema["t"].dataType))
+        assert seen == [TimestampNTZType, TimestampType] * 2
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_upsert_parquet_replaces_and_appends(spark):
     import tempfile
     from bda_spadochrony_spark.sources.writers import upsert_parquet

@@ -154,9 +154,9 @@ def main() -> None:
         "  scan is column-pruned with pushed filters.",
         "- `range_window_sum` is the reference-parity GLOBAL window (single",
         "  partition by design); `range_window_partitioned` is the scale path.",
-        "- `traffic_hourly` is the reference-parity multi-scan shape;",
-        "  `traffic_hourly_fused` is the scale rewrite (same oracle, one",
-        "  fused fine aggregate, ~40% fewer scans/exchanges).",
+        "- `traffic_hourly` and `traffic_hourly_fused` build the one plan:",
+        "  one scan, each level one Expand + aggregate + roll-up (the",
+        "  reference's 9-scan shape lives in tests/references.py).",
         "- Deliberate Python (Arrow) stages: `asof_join` (cogrouped",
         "  merge_asof), `embedding_topk`/`embedding_near_dup`/",
         "  `dedup_clusters` inputs (cogrouped BLAS block matmul),",
